@@ -10,11 +10,12 @@ Spark-first split of the reference's binary IVF:
   distributed.
 - **Add**: hamming argmin against broadcast centroids via ``mapInPandas``
   (Arrow-batched numpy popcount), assignments partitioned by ``cell_id``.
-- **Search**: probe ``nprobe`` nearest cells per query (driver-side over
-  the tiny centroid matrix), broadcast the probe list, scan only probed
-  cells with the binary distance kernel, partial-then-final top-k — the
-  same plan shape as the dense IVF (operators/ivf.py), so partition
-  pruning on ``cell_id`` does the byte-skipping at scale.
+- **Search**: the shared IVF query front end (operators/ivf.py) resolves
+  the strategy and collects the queries; probe ``nprobe`` nearest cells
+  per query by hamming (driver-side over the tiny centroid matrix),
+  broadcast the probe list, scan only probed cells with the binary
+  distance expression, partial-then-final top-k — partition pruning on
+  ``cell_id`` does the byte-skipping at scale.
 """
 
 from __future__ import annotations
@@ -34,7 +35,9 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import IndexType, IvfConfig, MetricType
+from knowhere_spark.functions.arrowio import binary_matrix, scalar_column
 from knowhere_spark.functions.binary import binary_distance_expr
+from knowhere_spark.operators.ivf import collect_queries, query_frame
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 
 _TRAIN_SAMPLE_MAX = 100_000
@@ -235,21 +238,11 @@ class BinaryIVFIndex:
         never collects — probe assignment runs as ``mapInPandas`` and the
         probe table joins candidates on ``cell_id`` (Catalyst/AQE picks
         the join strategy).  ``auto`` cuts over by query count."""
-        from knowhere_spark.operators.ivf import IVFFlatIndex
-
         metric = MetricType(self.config.metric_type)
         spark = self.assignments.sparkSession
 
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        nq_max = IVFFlatIndex._DRIVER_NQ_MAX
-        if strategy == "auto":
-            qrows = queries.limit(nq_max + 1).collect()
-            strategy = "distributed" if len(qrows) > nq_max else "driver"
-        elif strategy == "driver":
-            qrows = queries.collect()
+        queries = query_frame(query_df, query_id_col, query_vec_col)
+        strategy, tbl = collect_queries(queries, strategy)
 
         cand = self.assignments
         if filter_expr is not None:
@@ -258,29 +251,25 @@ class BinaryIVFIndex:
         if strategy == "distributed":
             probe_df = self.probe_assign(queries, nprobe)
             joined = cand.join(probe_df, "cell_id")
-        elif strategy == "driver":
-            Q = np.frombuffer(
-                b"".join(r["qvec"] for r in qrows), dtype=np.uint8
-            ).reshape(len(qrows), -1)
+        else:
+            qids = scalar_column(tbl, "query_id", np.int64)
+            Q = binary_matrix(tbl, "qvec").reshape(len(qids), self.centroids.shape[1])
             # probe by hamming-to-centroid regardless of scan metric (the
             # reference's binary coarse quantizer is hamming-based)
             order = np.argsort(
                 _hamming_matrix(Q, self.centroids), axis=1, kind="stable"
             )[:, :nprobe]
-            probe_rows = [
-                (int(r["query_id"]), int(c), bytes(r["qvec"]))
-                for r, cells in zip(qrows, order)
-                for c in cells
-            ]
             probe_df = spark.createDataFrame(
-                probe_rows, "query_id long, cell_id int, qvec binary"
+                [
+                    (int(q), int(c), q_bytes.tobytes())
+                    for q, q_bytes, cells in zip(qids, Q, order)
+                    for c in cells
+                ],
+                "query_id long, cell_id int, qvec binary",
             )
-            cells = sorted({c for _, c, _ in probe_rows})
-            joined = cand.filter(F.col("cell_id").isin(cells)).join(
+            joined = cand.filter(F.col("cell_id").isin(np.unique(order).tolist())).join(
                 F.broadcast(probe_df), "cell_id"
             )
-        else:
-            raise ValueError(f"unknown strategy {strategy!r}")
 
         return joined.select(
             "query_id",

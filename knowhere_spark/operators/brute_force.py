@@ -15,7 +15,7 @@ Two physical strategies for the same logical plan:
 - ``sql``: ``crossJoin(broadcast(queries))`` → native higher-order-fn
   distance → window top-k.  Whole-stage-codegen'd, fully deterministic
   float64 — used for oracle-checked queries and small nq·nb.
-- ``gemm``: ``mapInPandas`` over base partitions with a broadcast numpy
+- ``gemm``: ``mapInArrow`` over base partitions with a broadcast numpy
   query matrix; each partition emits its local top-k (partial reduce),
   then one final window over ``num_partitions · nq · k`` rows.  This is
   the 100TB-scale path: no nq×nb shuffle ever materializes, base scan
@@ -24,10 +24,8 @@ Two physical strategies for the same logical plan:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -38,12 +36,14 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import BaseConfig, MetricType
+from knowhere_spark.functions.arrowio import binary_matrix, list_matrix, scalar_column
 from knowhere_spark.functions.binary import binary_distance_expr, structure_match_expr
 from knowhere_spark.functions.distance import (
     distance_expr,
     local_topk,
     pairwise_distances,
 )
+from knowhere_spark.operators.ivf import collect_queries, query_frame
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 
 RESULT_SCHEMA = StructType(
@@ -71,11 +71,7 @@ def _prep(
     base = base_df.select(
         F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
     )
-    queries = query_df.select(
-        F.col(query_id_col).cast("long").alias("query_id"),
-        F.col(query_vec_col).alias("qvec"),
-    )
-    return base, queries
+    return base, query_frame(query_df, query_id_col, query_vec_col)
 
 
 class BruteForce:
@@ -178,7 +174,7 @@ class BruteForce:
     ) -> DataFrame:
         """Exact top-k with NO driver collect of either side — the
         corpus-vs-corpus regime where ``nq`` is far past broadcast range
-        (the gemm path's ``queries.collect()`` contract is nq<=10k).
+        (the gemm path's driver collect of the query set is nq<=10k).
 
         Block nested-loop GEMM: the base is hashed into ``n_blocks``
         blocks, the query set is replicated once per block (a shuffle,
@@ -199,11 +195,6 @@ class BruteForce:
             "block_id", F.explode(F.sequence(F.lit(0), F.lit(B - 1)))
         ).withColumn("block_id", F.col("block_id").cast("int"))
         largest = metric.is_similarity
-
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import list_matrix, scalar_column
-
         _res_pa = pa.schema(
             [("query_id", pa.int64()), ("neighbor_id", pa.int64()),
              ("distance", pa.float64())]
@@ -353,26 +344,17 @@ def _binary_gemm_partial_topk(
     popcount kernel (functions/binary.binary_pairwise) + local_topk — the
     binary twin of the float GEMM path, so binary KNN never shuffles the
     nq×nb scored set either."""
-    from knowhere_spark.functions.binary import _to_matrix, binary_pairwise
+    from knowhere_spark.functions.binary import binary_pairwise
 
     spark = base.sparkSession
-    qrows = queries.collect()   # nq small by contract (same as float gemm)
-    if not qrows:   # empty query set => empty result, not a reshape crash
+    _, qtbl = collect_queries(queries)   # nq small by contract (same as float gemm)
+    if qtbl.num_rows == 0:   # empty query set => empty result, not a reshape crash
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    Q = np.frombuffer(
-        b"".join(r["qvec"] for r in qrows), dtype=np.uint8
-    ).reshape(len(qrows), -1)
+    qids = scalar_column(qtbl, "query_id", np.int64)
+    Q = binary_matrix(qtbl, "qvec")
     bq = spark.sparkContext.broadcast((qids, Q))
 
     def kernel(batches):
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import (
-            binary_matrix,
-            scalar_column,
-        )
-
         b_qids, b_Q = bq.value
         for rb in batches:
             if rb.num_rows == 0:
@@ -406,19 +388,15 @@ def _gemm_partial_topk(
     ~1e-12, exact after the documented rounding at the API entry layer).
     """
     spark = base.sparkSession
-    qrows = queries.collect()   # nq is small by contract (reference nq=10..10k)
-    if not qrows:   # empty query set => empty result, not a reshape crash
+    _, qtbl = collect_queries(queries)   # nq is small by contract (reference nq=10..10k)
+    if qtbl.num_rows == 0:   # empty query set => empty result, not a reshape crash
         return spark.createDataFrame([], RESULT_SCHEMA)
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
+    qids = scalar_column(qtbl, "query_id", np.int64)
+    qmat = list_matrix(qtbl, "qvec")
     bq = spark.sparkContext.broadcast((qids, qmat))
     largest = metric.is_similarity
 
     def kernel(batches):
-        import pyarrow as pa
-
-        from knowhere_spark.functions.arrowio import list_matrix, scalar_column
-
         b_qids, b_qmat = bq.value
         for rb in batches:
             if rb.num_rows == 0:

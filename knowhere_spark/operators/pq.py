@@ -13,9 +13,11 @@ Spark-first split:
   ``(id, cell_id, codes ARRAY<SMALLINT>)`` — a ~dim/ m·4-fold byte
   reduction, which is the whole point at 100 TB: the probe scan reads
   codes, never raw vectors.
-- **Search (ADC)**: per query build the ``(m, 2^nbits)`` lookup table of
-  sub-distances once on the driver, broadcast all LUTs, probe ``nprobe``
-  cells, and run one ``mapInPandas`` kernel that loops over CELLS —
+- **Search (ADC)**: the shared IVF query front end (operators/ivf.py)
+  collects and probes the queries; each task builds the per-query
+  ``(m, 2^nbits)`` lookup tables of sub-distances from the broadcast
+  query matrix and codebooks, and one ``mapInArrow`` kernel loops over
+  CELLS —
   scoring each cell's rows against all its probing queries in a single
   vectorized LUT gather (the classic asymmetric-distance scan) and
   reducing to the partition's exact per-query top-k before the final
@@ -25,7 +27,7 @@ Spark-first split:
 
 Vectors are encoded directly (no residual subtraction) — the
 ``by_residual=false`` faiss variant — so one LUT per query serves every
-probed cell and the plan stays a single broadcast join.  COSINE follows
+probed cell and the plan stays a single masked cell scan.  COSINE follows
 the normalize-at-train contract (ivf.cc:462-470): encode normalized
 vectors and score IP.
 """
@@ -36,11 +38,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     ShortType,
@@ -49,8 +51,20 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import IndexType, IvfPqConfig, MetricType
+from knowhere_spark.functions.arrowio import list_matrix, scalar_column
 from knowhere_spark.functions.distance import normalize_expr
-from knowhere_spark.operators.ivf import IVFFlatIndex
+from knowhere_spark.operators.brute_force import RESULT_SCHEMA
+from knowhere_spark.operators.ivf import (
+    IVFFlatIndex,
+    _assign_cells,
+    clustered_search_view,
+    cogroup_cells_range,
+    cogroup_cells_topk,
+    open_search,
+    probe_assign_df,
+    query_frame,
+    scan_metric,
+)
 from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
 
 _TRAIN_SAMPLE_MAX = 100_000
@@ -232,8 +246,6 @@ class IVFPqIndex:
         """Append rows with frozen train state — existing coarse centroids
         assign the cell, existing codebooks encode the codes
         (``IndexNode::Add``, index_node.h:120-121)."""
-        from knowhere_spark.operators.ivf import _assign_cells
-
         metric = MetricType(self.config.metric_type)
         new = new_df.select(
             F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
@@ -270,7 +282,7 @@ class IVFPqIndex:
         """ADC top-k over probed cells (the LUT-scan of ivf.cc's PQ path).
 
         ``strategy='distributed'`` never collects the query set: probes
-        assign via ``mapInPandas`` and scoring cogroups cells with their
+        assign via ``mapInArrow`` and scoring cogroups cells with their
         probing queries, reconstructing vectors from codes inside the GEMM
         kernel — decode-then-GEMM is arithmetically identical to the ADC
         LUT sum (each LUT entry IS the sub-distance to the decoded
@@ -294,47 +306,30 @@ class IVFPqIndex:
         metric = MetricType(self.config.metric_type)
         spark = self.codes.sparkSession
 
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
+        front = open_search(
+            self, query_df, k, nprobe, strategy, query_id_col, query_vec_col
         )
-        if strategy == "auto":
-            qrows = queries.limit(IVFFlatIndex._DRIVER_NQ_MAX + 1).collect()
-            strategy = (
-                "distributed" if len(qrows) > IVFFlatIndex._DRIVER_NQ_MAX else "driver"
+        rows_acc = front.metrics["rows_scanned"]
+        if front.strategy == "distributed":
+            # decode-then-GEMM per cell; project away the optional raw-vec
+            # column BEFORE the cell shuffle — refine re-joins raw vectors
+            approx = cogroup_cells_topk(
+                clustered_search_view(
+                    self, self.codes.select("id", "cell_id", "codes")
+                ),
+                probe_assign_df(front.queries, self.centroids, metric, nprobe),
+                stage_k, scan_metric(metric),
+                filter_expr=filter_expr, row_matrix=self.row_matrix(),
+                rows_acc=rows_acc,
             )
-        elif strategy == "driver":
-            qrows = queries.collect()
-        if strategy == "distributed":
-            approx = self._search_distributed(
-                queries, stage_k, nprobe, metric, filter_expr
-            )
-            return self._maybe_refine(approx, queries, k, refine_k, metric)
-        if strategy != "driver":
-            raise ValueError(f"unknown strategy {strategy!r}")
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        if metric == MetricType.COSINE:
-            qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            qmat = qmat / qn
+            return self._maybe_refine(approx, front.queries, k, refine_k, metric)
 
-        m, ksub, subdim = self.codebooks.shape
         sim = metric.is_similarity
-        # probe cells on the (tiny) coarse centroid matrix — same rule as
-        # IVF: L2 = the assignment geometry (see IVFFlatIndex._probe_pairs)
-        from knowhere_spark.functions.distance import pairwise_distances
-
-        d = pairwise_distances(self.centroids, qmat, MetricType.L2)  # (nlist, nq)
-        order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]
-        cells = sorted({int(c) for c in order.ravel()})
+        qids = front.qids
         # per-cell probing-query index lists: the kernel loops over CELLS
         # (<= nlist per partition), never over queries
-        nlist = self.centroids.shape[0]
-        P = np.zeros((nlist, len(qids)), dtype=bool)
-        for qi in range(len(qids)):
-            P[order[:, qi], qi] = True
-        probe_q_by_cell = {int(c): np.where(P[c])[0] for c in cells}
+        cells = np.flatnonzero(front.probed.any(axis=1)).tolist()
+        probe_q_by_cell = {c: np.flatnonzero(front.probed[c]) for c in cells}
 
         cand = self.codes
         if filter_expr is not None:
@@ -361,7 +356,7 @@ class IVFPqIndex:
             if want < spark.sparkContext.defaultParallelism:
                 cand = cand.repartition(want)
 
-        # ADC + per-partition exact top-stage_k INSIDE one mapInPandas
+        # ADC + per-partition exact top-stage_k INSIDE one mapInArrow
         # kernel: the r3 path shuffled EVERY scored (query, candidate) row
         # into topk_per_key — ~nq·nprobe·cellsize rows — where only
         # nq·stage_k per partition can survive.  The kernel loops over
@@ -378,25 +373,11 @@ class IVFPqIndex:
         # from the same float64 inputs with the same expressions —
         # bit-identical tables for ~10 ms of GEMM.
         bc = spark.sparkContext.broadcast(
-            (qids, qmat, self.codebooks, probe_q_by_cell)
-        )
-        out_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("distance", DoubleType()),
-            ]
+            (qids, front.qmat, self.codebooks, probe_q_by_cell)
         )
         kk, lg = stage_k, sim
 
         def kernel(batches):
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
             b_qids, b_qmat, CB3, by_cell = bc.value
             mm, b_ksub, sd = CB3.shape
             L = np.empty((len(b_qids), mm, b_ksub))
@@ -418,6 +399,8 @@ class IVFPqIndex:
                 codes = list_matrix(tbl, "codes", np.int64)
                 ids = scalar_column(tbl, "id", np.int64)
                 cell = scalar_column(tbl, "cell_id", np.int64)
+                if rows_acc is not None:
+                    rows_acc.add(len(ids))
                 rorder = np.argsort(cell, kind="stable")
                 csort = cell[rorder]
                 uniq, starts = np.unique(csort, return_index=True)
@@ -463,12 +446,12 @@ class IVFPqIndex:
                     names=["query_id", "neighbor_id", "distance"],
                 )
 
-        scored = cand.mapInArrow(kernel, out_schema)
+        scored = cand.mapInArrow(kernel, RESULT_SCHEMA)
         approx = topk_per_key(
             scored, "query_id", "distance", stage_k,
             ascending=not sim, tie_breaker="neighbor_id",
         )
-        return self._maybe_refine(approx, queries, k, refine_k, metric)
+        return self._maybe_refine(approx, front.queries, k, refine_k, metric)
 
     def _maybe_refine(self, approx, queries, k, refine_k, metric):
         """Exact re-rank of the ADC survivors (stage 2 of quantize-then-
@@ -492,35 +475,22 @@ class IVFPqIndex:
             query_vec_col="qvec",
         )
 
-    def _search_distributed(self, queries, k, nprobe, metric, filter_expr):
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_topk,
-            probe_assign_df,
-        )
-
-        probes = probe_assign_df(queries, self.centroids, metric, nprobe)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        CB = self.codebooks   # (m, ksub, subdim) — small, task-pickled
+    def row_matrix(self):
+        """The cell scans' ``row_matrix`` hook: a ``codes`` batch →
+        ``(n, dim)`` float64 reconstructed vectors (each subspace's
+        codeword).  Decode-then-GEMM is arithmetically the ADC LUT sum —
+        each LUT entry IS the sub-distance to the decoded codeword.
+        Shared by the distributed and range paths; the closure carries
+        only the small codebook tensor."""
+        CB = self.codebooks   # (m, ksub, subdim)
 
         def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
             codes = list_matrix(tbl, "codes", np.int64)   # (n, m)
-            mm = CB.shape[0]
             return np.concatenate(
-                [CB[j][codes[:, j]] for j in range(mm)], axis=1
+                [CB[j][codes[:, j]] for j in range(CB.shape[0])], axis=1
             )
 
-        # project away the optional raw-vec column BEFORE the cell shuffle —
-        # the ADC kernel reads codes only; refine re-joins raw vectors later
-        return cogroup_cells_topk(
-            clustered_search_view(
-                self, self.codes.select("id", "cell_id", "codes")
-            ),
-            probes, k, dist_metric,
-            filter_expr=filter_expr, row_matrix=decode,
-        )
+        return decode
 
     def range_search(
         self,
@@ -535,41 +505,21 @@ class IVFPqIndex:
         """ADC distance-in-range within probed cells (half-open bounds per
         range_util.h:22-25) — codeword reconstruction inside the cogroup
         kernel, identical arithmetic to the LUT sum."""
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_range,
-            probe_assign_df,
-        )
-        from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
-
         cfg = config or self.config
         nprobe = min(
             nprobe if nprobe is not None else cfg.nprobe, self.config.nlist
         )
         metric = MetricType(cfg.metric_type)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
+        queries = query_frame(query_df, query_id_col, query_vec_col)
         probes = probe_assign_df(queries, self.centroids, metric, nprobe)
         lo, hi, sim = cfg.range_bounds()
-        CB = self.codebooks
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.int64)
-            return np.concatenate(
-                [CB[j][codes[:, j]] for j in range(CB.shape[0])], axis=1
-            )
-
         out = cogroup_cells_range(
             clustered_search_view(
                 self, self.codes.select("id", "cell_id", "codes")
             ),
             probes, lo, hi, sim,
-            dist_metric, filter_expr=filter_expr, row_matrix=decode,
+            scan_metric(metric), filter_expr=filter_expr,
+            row_matrix=self.row_matrix(),
         )
         return apply_range_bounds(out, cfg, already_bounded=True)
 

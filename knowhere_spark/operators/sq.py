@@ -4,9 +4,11 @@ faiss QT_8bit semantics: per-dimension min/max affine quantization; the
 
 Storage: the assignment table keeps ``codes ARRAY<SMALLINT>`` (uint8 range)
 instead of raw floats — 4× smaller scans at probe time; the per-dim
-``(vmin, vdiff)`` training stats live in the manifest and are broadcast to
-the decode kernel.  Decode+distance runs in an Arrow-batched pandas kernel
-(the quantized-scan analog of the reference's SQ distance computers).
+``(vmin, vdiff)`` training stats live in the manifest and travel with the
+decode hook (:meth:`IVFSq8Index.row_matrix`).  Search is the shared IVF driver-search core
+(operators/ivf.py) with SQ's decode as its ``row_matrix`` hook: the
+masked ``mapInArrow`` cell scan on the driver path, the per-cell cogroup
+on the distributed and range paths.
 """
 
 from __future__ import annotations
@@ -26,12 +28,21 @@ from pyspark.sql.types import (
 )
 
 from knowhere_spark.config import IndexType, IvfSq8Config, MetricType
-from knowhere_spark.functions.distance import (
-    normalize_expr,
-    pairwise_distances,
+from knowhere_spark.functions.arrowio import list_matrix
+from knowhere_spark.functions.distance import normalize_expr
+from knowhere_spark.operators.ivf import (
+    IVFFlatIndex,
+    _assign_cells,
+    clustered_search_view,
+    cogroup_cells_range,
+    cogroup_cells_topk,
+    open_search,
+    probe_assign_df,
+    query_frame,
+    scan_cells_topk,
+    scan_metric,
 )
-from knowhere_spark.operators.ivf import IVFFlatIndex
-from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
+from knowhere_spark.operators.topk import apply_range_bounds
 from knowhere_spark.sources.index_store import IndexStore
 
 
@@ -229,8 +240,6 @@ class IVFSq8Index:
         the cell, the trained ``vmin/vdiff`` scale encodes the codes
         (``IndexNode::Add``, index_node.h:120-121; out-of-range values
         clip exactly as faiss SQ8 does)."""
-        from knowhere_spark.operators.ivf import _assign_cells
-
         metric = MetricType(self.config.metric_type)
         scalars = self._scalar_payload()
         missing = [c for c in scalars if c not in new_df.columns]
@@ -260,6 +269,19 @@ class IVFSq8Index:
             index_type=self.index_type,
         )
 
+    def row_matrix(self):
+        """The cell scans' ``row_matrix`` hook: a ``codes`` batch →
+        ``(n, dim)`` float64 decoded vectors ``vmin + code/levels·vdiff``
+        (the quantized-scan analog of the reference's SQ distance
+        computers).  Shared by the driver, distributed and range paths;
+        the closure carries only the tiny per-dim train arrays."""
+        lo, diff, levels = self.vmin, self.vdiff, float(_levels(self.config.code_size))
+
+        def decode(tbl):
+            return lo + list_matrix(tbl, "codes") / levels * diff
+
+        return decode
+
     def search(
         self,
         query_df: DataFrame,
@@ -280,148 +302,21 @@ class IVFSq8Index:
         k = k if k is not None else self.config.k
         nprobe = min(nprobe if nprobe is not None else self.config.nprobe, self.config.nlist)
         metric = MetricType(self.config.metric_type)
-        spark = self.assignments.sparkSession
-
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
+        front = open_search(
+            self, query_df, k, nprobe, strategy, query_id_col, query_vec_col
         )
-        if strategy == "auto":
-            qrows = queries.limit(IVFFlatIndex._DRIVER_NQ_MAX + 1).collect()
-            strategy = (
-                "distributed" if len(qrows) > IVFFlatIndex._DRIVER_NQ_MAX else "driver"
+        rows_acc = front.metrics["rows_scanned"]
+        if front.strategy == "distributed":
+            probes = probe_assign_df(front.queries, self.centroids, metric, nprobe)
+            return cogroup_cells_topk(
+                clustered_search_view(self), probes, k, scan_metric(metric),
+                filter_expr=filter_expr, row_matrix=self.row_matrix(),
+                rows_acc=rows_acc,
             )
-        elif strategy == "driver":
-            qrows = queries.collect()
-        if strategy == "distributed":
-            return self._search_distributed(queries, k, nprobe, metric, filter_expr)
-        if strategy != "driver":
-            raise ValueError(f"unknown strategy {strategy!r}")
-        qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        if metric == MetricType.COSINE:
-            qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            qmat = qmat / qn
-
-        # probe ranking = assignment geometry (L2, see IVFFlatIndex._probe_pairs);
-        # scoring inside the probed cells uses the true metric below
-        score_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        d = pairwise_distances(self.centroids, qmat, MetricType.L2)
-        order = np.argsort(d, axis=0, kind="stable")[:nprobe, :]
-        cells = sorted({int(c) for c in order.ravel()})
-
-        cand = self.assignments
-        if filter_expr is not None:
-            cand = cand.filter(filter_expr)
-        cand = cand.filter(F.col("cell_id").isin(cells))
-
-        # broadcast: query matrix + (nlist, nq) probe-membership matrix —
-        # the same batch-vectorized layout as IVFFlatIndex._search_probed.
-        # The former kernel looped PER QUERY (np.isin over the cell column
-        # + a one-column local_topk, nq times per batch) — at nq=1000 that
-        # Python loop was the entry's dominant cost; one fancy-index +
-        # one masked argpartition over the whole (n, nq) matrix does the
-        # identical selection (tie-widened at the finite boundary, so the
-        # final (distance, id) window sees every contender — result
-        # bit-equal, pinned by the exact-operating-point oracle gates).
-        nq = len(qids)
-        probe_matrix = np.zeros((self.config.nlist, nq), dtype=bool)
-        probe_matrix[order, np.arange(nq)[None, :]] = True
-        bq = spark.sparkContext.broadcast(
-            (qids, qmat, probe_matrix, self.vmin, self.vdiff,
-             float(_levels(self.config.code_size)), score_metric.value)
-        )
-        largest = score_metric.is_similarity
-
-        out_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("neighbor_id", LongType()),
-                StructField("distance", DoubleType()),
-            ]
-        )
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            from knowhere_spark.functions.arrowio import (
-                list_matrix,
-                scalar_column,
-            )
-
-            b_qids, b_qmat, b_member, lo_, diff_, lv_, pm = bq.value
-            pm = MetricType(pm)
-            b_nq = len(b_qids)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([rb])
-                codes = list_matrix(tbl, "codes", np.float64)
-                X = lo_ + codes / lv_ * diff_
-                ids = scalar_column(tbl, "id", np.int64)
-                cell = scalar_column(tbl, "cell_id", np.int64)
-                n = len(ids)
-                dist = pairwise_distances(X, b_qmat, pm)   # (n, nq)
-                member = b_member[cell]                    # (n, nq)
-                key = -dist if largest else dist
-                key = np.where(member, key, np.inf)
-                kk = min(k, n)
-                sel = np.zeros((n, b_nq), dtype=bool)
-                if kk < n:
-                    part = np.argpartition(key, kk - 1, axis=0)[:kk]
-                    col = np.arange(b_nq)
-                    sel[part, col[None, :]] = True
-                    # widen to rows tied at a FINITE per-query boundary:
-                    # quantized distances tie OFTEN (identical codes
-                    # decode equal) and the final window tie-breaks
-                    # (distance, id)
-                    bnd = key[part, col[None, :]].max(axis=0)
-                    finite_b = np.isfinite(bnd)
-                    if finite_b.any():
-                        sel |= (key == bnd[None, :]) & finite_b[None, :]
-                else:
-                    sel[:] = True
-                sel &= member
-                rows_f, q_f = np.nonzero(sel)
-                if len(rows_f) == 0:
-                    continue
-                yield pa.record_batch(
-                    [
-                        pa.array(b_qids[q_f], type=pa.int64()),
-                        pa.array(ids[rows_f], type=pa.int64()),
-                        pa.array(dist[rows_f, q_f], type=pa.float64()),
-                    ],
-                    names=["query_id", "neighbor_id", "distance"],
-                )
-
-        scored = cand.mapInArrow(kernel, out_schema)
-        return topk_per_key(
-            scored, "query_id", "distance", k,
-            ascending=not largest, tie_breaker="neighbor_id",
-        )
-
-    def _search_distributed(self, queries, k, nprobe, metric, filter_expr):
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_topk,
-            probe_assign_df,
-        )
-
-        probes = probe_assign_df(queries, self.centroids, metric, nprobe)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        lo_, diff_ = self.vmin, self.vdiff   # tiny per-dim arrays, task-pickled
-        lv_ = float(_levels(self.config.code_size))
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.float64)
-            return lo_ + codes / lv_ * diff_
-
-        return cogroup_cells_topk(
-            clustered_search_view(self), probes, k, dist_metric,
-            filter_expr=filter_expr, row_matrix=decode,
+        return scan_cells_topk(
+            self.assignments, front.probed, front.qids, front.qmat, k,
+            scan_metric(metric), filter_expr=filter_expr,
+            row_matrix=self.row_matrix(), rows_acc=rows_acc,
         )
 
     def range_search(
@@ -438,37 +333,17 @@ class IVFSq8Index:
         the IVF range path on quantized storage (half-open bounds per
         range_util.h:22-25).  Served through the cogroup machinery, which
         is correct at any nq."""
-        from knowhere_spark.operators.ivf import (
-            clustered_search_view,
-            cogroup_cells_range,
-            probe_assign_df,
-        )
-        from knowhere_spark.operators.topk import apply_range_bounds, topk_per_key
-
         cfg = config or self.config
         nprobe = min(
             nprobe if nprobe is not None else cfg.nprobe, self.config.nlist
         )
         metric = MetricType(cfg.metric_type)
-        dist_metric = MetricType.IP if metric == MetricType.COSINE else metric
-        queries = query_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
+        queries = query_frame(query_df, query_id_col, query_vec_col)
         probes = probe_assign_df(queries, self.centroids, metric, nprobe)
         lo, hi, sim = cfg.range_bounds()
-        lo_, diff_ = self.vmin, self.vdiff
-        lv_ = float(_levels(self.config.code_size))
-
-        def decode(tbl):
-            from knowhere_spark.functions.arrowio import list_matrix
-
-            codes = list_matrix(tbl, "codes", np.float64)
-            return lo_ + codes / lv_ * diff_
-
         out = cogroup_cells_range(
-            clustered_search_view(self), probes, lo, hi, sim, dist_metric,
-            filter_expr=filter_expr, row_matrix=decode,
+            clustered_search_view(self), probes, lo, hi, sim, scan_metric(metric),
+            filter_expr=filter_expr, row_matrix=self.row_matrix(),
         )
         return apply_range_bounds(out, cfg, already_bounded=True)
 

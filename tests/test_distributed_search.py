@@ -1,10 +1,12 @@
 """Large-nq distributed search paths: no driver collect of the query set.
 
-The driver path's ``queries.collect()`` is the reference's nq<=10k serving
-contract; corpus-vs-corpus workloads (semantic dedup of a 100 TB table
-against itself) need probe assignment and scoring to distribute.  These
-tests assert (a) the distributed plans are built without ever collecting
-the query DataFrame, and (b) results equal the collect path exactly.
+The driver path's Arrow collect of the query set is the reference's
+nq<=10k serving contract; corpus-vs-corpus workloads (semantic dedup of a
+100 TB table against itself) need probe assignment and scoring to
+distribute.  These tests assert (a) the distributed plans are built
+without ever collecting the query DataFrame, (b) results equal the
+driver path exactly, and (c) the driver path itself never Row-collects
+and serves an empty query set as an empty result.
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ class _NoCollect:
         from pyspark.sql.classic.dataframe import DataFrame as CDF
 
         def banned(self_, *a, **kw):
-            raise AssertionError("driver collect() during distributed plan")
+            raise AssertionError("Row collect() while building or running a search")
 
         self.monkeypatch.setattr(CDF, "collect", banned)
         return self
@@ -117,20 +119,30 @@ def test_ivf_distributed_ensure_topk_full(spark, monkeypatch):
     assert _rows(out) == _rows(exact)
 
 
-def test_sq8_distributed_matches_driver(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "metric,filtered",
+    [("L2", False), ("IP", False), ("COSINE", False), ("L2", True)],
+    ids=["L2", "IP", "COSINE", "L2-filter"],
+)
+def test_sq8_distributed_matches_driver(spark, monkeypatch, metric, filtered):
     from knowhere_spark.config import IvfSq8Config
     from knowhere_spark.operators.sq import IVFSq8Index
 
     base = gen_dense(1200, 16, seed=41)
     q = gen_dense(150, 16, seed=42)
     idx = IVFSq8Index.build(
-        dense_df(spark, base), IvfSq8Config(metric_type="L2", nlist=12, nprobe=4)
+        dense_df(spark, base), IvfSq8Config(metric_type=metric, nlist=12, nprobe=4)
     )
     idx.assignments.cache().count()
     q_df = dense_df(spark, q, QUERY_SCHEMA)
+    flt = F.col("id") % 3 != 0 if filtered else None
     with _NoCollect(monkeypatch):
-        dist_df = idx.search(q_df, k=10, nprobe=4, strategy="distributed")
-    assert _rows(dist_df) == _rows(idx.search(q_df, k=10, nprobe=4, strategy="driver"))
+        dist_df = idx.search(
+            q_df, k=10, nprobe=4, strategy="distributed", filter_expr=flt
+        )
+    assert _rows(dist_df) == _rows(
+        idx.search(q_df, k=10, nprobe=4, strategy="driver", filter_expr=flt)
+    )
 
 
 def test_pq_distributed_matches_driver(spark, monkeypatch):
@@ -225,3 +237,53 @@ def test_scann_distributed_matches_driver(spark, monkeypatch):
         dist_df = idx.search(q_df, k=10, strategy="distributed")
     driver_df = idx.search(q_df, k=10, strategy="driver")
     assert _rows(dist_df) == _rows(driver_df)
+
+
+@pytest.fixture(scope="module")
+def family_indexes(spark):
+    """One small index per IVF family, each with a 20-query frame."""
+    from knowhere_spark.config import IvfPqConfig, IvfSq8Config
+    from knowhere_spark.operators.bin_ivf import BinaryIVFIndex
+    from knowhere_spark.operators.pq import IVFPqIndex
+    from knowhere_spark.operators.sq import IVFSq8Index
+    from tests.conftest import BIN_QUERY_SCHEMA, binary_df, gen_binary
+
+    base_df = dense_df(spark, gen_dense(600, 16, seed=61))
+    q_df = dense_df(spark, gen_dense(20, 16, seed=62), QUERY_SCHEMA)
+    bin_base = binary_df(spark, gen_binary(600, 64, seed=63))
+    bin_q = binary_df(spark, gen_binary(20, 64, seed=64), BIN_QUERY_SCHEMA)
+    cfg = dict(metric_type="L2", nlist=6, nprobe=2)
+    return {
+        "IVF_FLAT": (IVFFlatIndex.build(base_df, IvfConfig(**cfg)), q_df),
+        "IVF_SQ8": (IVFSq8Index.build(base_df, IvfSq8Config(**cfg)), q_df),
+        "IVF_PQ": (IVFPqIndex.build(base_df, IvfPqConfig(**cfg, m=4, nbits=4)), q_df),
+        "BIN_IVF_FLAT": (
+            BinaryIVFIndex.build(
+                bin_base, IvfConfig(metric_type="HAMMING", nlist=6, nprobe=2)
+            ),
+            bin_q,
+        ),
+    }
+
+
+@pytest.mark.parametrize("strategy", ["auto", "driver"])
+@pytest.mark.parametrize("family", ["IVF_FLAT", "IVF_SQ8", "IVF_PQ", "BIN_IVF_FLAT"])
+def test_empty_query_set_returns_empty_result(family_indexes, family, strategy):
+    idx, q_df = family_indexes[family]
+    out = idx.search(q_df.limit(0), k=5, strategy=strategy)
+    assert out.columns == ["query_id", "neighbor_id", "distance", "rank"]
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize("strategy", ["auto", "driver"])
+@pytest.mark.parametrize("family", ["IVF_FLAT", "IVF_SQ8", "IVF_PQ"])
+def test_driver_path_collects_queries_without_rows(
+    family_indexes, family, strategy, monkeypatch
+):
+    """The driver path brings its query set home through Arrow: neither
+    building the plan nor consuming it calls a Row collect()."""
+    idx, q_df = family_indexes[family]
+    with _NoCollect(monkeypatch):
+        out = idx.search(q_df, k=5, strategy=strategy).toArrow()
+    assert idx.last_metrics["strategy"] == "driver"
+    assert out.num_rows == 20 * 5

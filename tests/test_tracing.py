@@ -7,6 +7,7 @@ accumulators, resolved by `.snapshot()` after the result is consumed)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from knowhere_spark.config import HnswConfig, IvfConfig
@@ -53,6 +54,29 @@ def test_ivf_distributed_search_metrics(spark):
     assert sm["strategy"] == "distributed"
     assert sm["rows_scanned"] > 0          # cogroup GEMM counter fired
     assert "knowhere:IVF_FLAT.search" in sm["description"]
+
+
+@pytest.mark.parametrize("family", ["IVF_FLAT", "IVF_SQ8", "IVF_PQ"])
+def test_dense_ivf_search_span(spark, family):
+    """Every dense IVF family's search opens the same span through the
+    shared front end: op, strategy, nq, cells probed, kernel rows."""
+    from knowhere_spark.config import IvfPqConfig, IvfSq8Config
+    from knowhere_spark.operators.pq import IVFPqIndex
+    from knowhere_spark.operators.sq import IVFSq8Index
+
+    cls, cfg = {
+        "IVF_FLAT": (IVFFlatIndex, IvfConfig),
+        "IVF_SQ8": (IVFSq8Index, IvfSq8Config),
+        "IVF_PQ": (IVFPqIndex, IvfPqConfig),
+    }[family]
+    base = dense_df(spark, gen_dense(400, 16, seed=29))
+    idx = cls.build(base, cfg(metric_type="L2", nlist=6, nprobe=2))
+    idx.search(dense_df(spark, gen_dense(6, 16, seed=30), QUERY_SCHEMA), k=4).count()
+    sm = idx.last_metrics.snapshot()
+    assert sm["op"] == f"{family}.search" and sm["strategy"] == "driver"
+    assert sm["nq"] == 6 and sm["cells_probed"] == 6 * 2
+    assert 0 < sm["rows_scanned"] <= 400
+    assert f"knowhere:{family}.search" in sm["description"]
 
 
 def test_hnsw_search_metrics_both_strategies(spark):
